@@ -9,6 +9,7 @@ predicate pushdown / column pruning into the scan.
 from __future__ import annotations
 
 import os
+import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -120,8 +121,7 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
 
 def few_input_splits(df: DataFrame) -> bool:
     """True when ``df``'s file scan arrives in too few splits to keep every
-    core busy — the guard that makes the ``_spread`` helpers (similarity /
-    text / multimodal / sampling / dedup.doc_shingles) SCALE-CONDITIONAL
+    core busy — the guard that makes ``spread`` SCALE-CONDITIONAL
     (VERDICT r10 #2). Locally every fixture table is ONE parquet file (one
     row group ⇒ one split), so explode/decode work downstream of a bare
     scan runs on one task and a round-robin repartition is a big win. On a
@@ -141,6 +141,18 @@ def few_input_splits(df: DataFrame) -> bool:
     return n_files < threshold
 
 
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition ``df`` across every core before per-row heavy work
+    (tokenize/shingle explodes, Arrow decodes, vector folds) when its scan
+    arrives in few splits (``few_input_splits``); otherwise ``df`` itself.
+    Round-robin with no ``keys``; hash by ``keys`` when a downstream
+    ``groupBy(keys)`` should reuse the partitioning instead of paying a
+    second exchange."""
+    if not few_input_splits(df):
+        return df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+
+
 def one_row_df(spark: SparkSession, cols: list[tuple]) -> DataFrame:
     """One-row DataFrame built entirely JVM-side (``range(1)`` + literal
     projections). The python-list ``createDataFrame([(...)])`` alternative
@@ -155,3 +167,25 @@ def one_row_df(spark: SparkSession, cols: list[tuple]) -> DataFrame:
     return spark.range(1).select(
         *[F.lit(v).cast(t).alias(n) for n, t, v in cols]
     )
+
+
+_SCRATCH_ROOT = None
+
+
+def _scratch(prefix: str) -> str:
+    """Session-scoped scratch dir for queries that materialize (streaming
+    sinks and landing zones, staged sources, rewritten tables): every
+    output/checkpoint/landing dir lives under ONE root that is removed at
+    interpreter exit, so repeated bench/pytest runs cannot accumulate
+    fixture-sized parquet + state-store copies in /tmp. Cleanup must be
+    deferred to exit: the returned DataFrames read the materialized
+    parquet LAZILY, so deleting right after return would break the
+    caller's collect."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import shutil
+
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="stream_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)

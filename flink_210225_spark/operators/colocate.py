@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_210225_spark.io import _scratch
+
 # bucket_prune_demo's per-session catalog bookkeeping (ADVICE r8 #1):
 # id(session) -> the catalog table the LAST invocation created, dropped on
 # re-entry so repeated bench reps don't accumulate catalog entries. Files
@@ -303,8 +305,6 @@ def bucket_prune_demo(tables: dict[str, DataFrame]) -> DataFrame:
 
     Scale: the write is one shuffle into 32 bucket files; the probe
     reads 2 buckets regardless of corpus size."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     out = _scratch(prefix="bktprune_")

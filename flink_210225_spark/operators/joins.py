@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import age_years, round2, round6
+from flink_210225_spark.io import _scratch
 
 # --- J1: interval join orders ⋈ lineitem, [0, +5 days) ---
 
@@ -1528,8 +1529,6 @@ def dpp_prune_join(tables: dict[str, DataFrame]) -> DataFrame:
 
     Scale: the fact scan reads only surviving partitions; the dim
     broadcast doubles as the pruning subquery (reused, not re-executed)."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     out = _scratch(prefix="dppsrc_")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import cond_sum, round2, round6
+from flink_210225_spark.io import _scratch
 from flink_210225_spark.schemas import LOG_EVENT_SCHEMA
 
 
@@ -226,8 +227,6 @@ def grok_router(tables: dict[str, DataFrame]) -> DataFrame:
     Scale: stateless regex ladder inside codegen over a splittable text
     scan; one map-side-combined rollup — the same envelope as the other
     dirty sources."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     line = (

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import round6
+from flink_210225_spark.io import _scratch
 
 
 def write_stats(df: DataFrame, path: str, dt_col: str = "stt", mode: str = "append") -> None:
@@ -1955,8 +1956,6 @@ def time_travel(tables: dict[str, DataFrame]) -> DataFrame:
     the snapshot's own size."""
     c = tables["customer"]
     spark = c.sparkSession
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     root = _scratch(prefix="tt_tbl_")
     base = c.select(
         "c_custkey",
@@ -2302,8 +2301,6 @@ def dynamic_overwrite(tables: dict[str, DataFrame]) -> DataFrame:
     purchases), written with ``partitionOverwriteMode=dynamic``; the
     read-back rolls up per day class. Scale: both writes are day-partitioned (partition count =
     calendar days); the restatement shuffles only its own days."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     out = _scratch(prefix="dynover_")
@@ -2391,8 +2388,6 @@ def wap_publish(tables: dict[str, DataFrame]) -> DataFrame:
     Plan: one staging write, one audit scan splitting via a single CASE
     reason column, two filtered writes, two read-back rollups. All
     day-partitionable at scale; the audit is a stateless projection."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     root = _scratch(prefix="wap_")
@@ -2949,8 +2944,6 @@ def file_skew_audit(tables: dict[str, DataFrame]) -> DataFrame:
     import os as _os
 
     import pandas as pd
-
-    from flink_210225_spark.streaming.pipelines import _scratch
 
     ev = tables["events"]
     spark = ev.sparkSession

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import round6
+from flink_210225_spark.io import spread
 from flink_210225_spark.ops.text import tokens_col
 
 # --- exact dedup ---
@@ -108,41 +109,11 @@ def shingles_col(text: Column, n: int = 3) -> Column:
 
 
 def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    # Repartition BEFORE the explode: the fixture scan is one parquet split
-    # locally, so the shingle explode + downstream hashing otherwise runs
-    # single-threaded (r9 bench root-cause — same fix as multimodal._spread).
-    # One exchange of (doc_id, text) rows buys every shingle consumer full
-    # parallelism. Scale-conditional (VERDICT r10 #2): on a real cluster
-    # the scan already arrives in thousands of splits and the repartition
-    # would be a full corpus network pass — skipped via few_input_splits.
-    from flink_210225_spark.io import few_input_splits
-
-    if few_input_splits(docs):
-        docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return docs.select("doc_id", F.explode(shingles_col(F.col("text"), n)).alias("shingle"))
-
-
-def _spread_by_doc(docs: DataFrame) -> DataFrame:
-    """Hash-repartition the docs scan BY doc_id before a token explode that
-    feeds a ``groupBy(doc_id)`` aggregation (r11; the fix for the
-    single-task signature aggregations that round-robin ``_spread`` could
-    not touch). Round-robin is WRONG for those paths — the r10 NOTE at
-    ``simhash_signatures`` measured it: splitting a doc's tokens across N
-    partitions multiplies the 63-column partial-agg output ~N×. Hashing by
-    doc_id keeps every doc in ONE partition, so the partial output stays
-    |docs| rows, AND the downstream groupBy(doc_id) REUSES the partitioning
-    (hash(doc_id) satisfies the aggregation's clustered distribution) — the
-    explode and the wide vote aggregation run defaultParallelism-way with
-    NO second exchange. Scale-conditional like every spread: skipped when
-    the scan already arrives in many splits (io.few_input_splits) — at
-    100 TB the groupBy's own shuffle of |docs| narrow partial rows is far
-    cheaper than re-shuffling corpus text bytes."""
-    from flink_210225_spark.io import few_input_splits
-
-    if not few_input_splits(docs):
-        return docs
-    sess = docs.sparkSession
-    return docs.repartition(sess.sparkContext.defaultParallelism, "doc_id")
+    # spread BEFORE the explode: the shingle explode + downstream hashing
+    # otherwise run on the single local scan split
+    return spread(docs).select(
+        "doc_id", F.explode(shingles_col(F.col("text"), n)).alias("shingle")
+    )
 
 
 def keep_best_dedup(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1167,13 +1138,13 @@ def simhash_signatures(tables: dict[str, DataFrame]) -> DataFrame:
     therefore over 63 effective bits, and its band 3 covers bits 48-62 (15
     effective bits) — the ≥1-exact-band guarantee for hamming ≤ 3 still
     holds (4 disjoint bands, 3 flipped bits can dirty at most 3)."""
-    # NOTE (r10, measured): round-robin _spread REGRESSED here (3.2->4.4 s):
+    # NOTE (r10, measured): a round-robin spread REGRESSED here (3.2->4.4 s):
     # the 63-vote groupBy(doc_id) has group cardinality == |docs|, so
     # splitting a doc across N partitions grows the 63-wide partial-agg
-    # output ~N×. r11: _spread_by_doc instead — hash(doc_id) keeps each doc
+    # output ~N×. Spread by doc_id instead — hash(doc_id) keeps each doc
     # whole (partials stay |docs|) and the groupBy reuses the partitioning,
     # so the explode + vote aggregation run fully parallel, one exchange.
-    docs = _spread_by_doc(tables["documents"])
+    docs = spread(tables["documents"], "doc_id")
     tok = docs.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
     h = tok.withColumn("th", F.xxhash64("tok"))
     votes = [
@@ -1276,10 +1247,10 @@ def simhash_banded_md5(
     ONE aggregation pass (no explode-per-bit), in-bucket pair generation
     — the only data-sized shuffle is the (band, key) groupBy over 2^16
     buckets per band."""
-    # _spread_by_doc: same single-task-explode fix as simhash_signatures —
+    # spread by doc_id: same single-task-explode fix as simhash_signatures —
     # hash(doc_id) parallelizes the md5+63-vote pass without widening
     # partials, and the groupBy(doc_id) reuses the partitioning.
-    docs = _spread_by_doc(tables["documents"])
+    docs = spread(tables["documents"], "doc_id")
     tok = docs.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
     m = F.md5("tok")
     h = tok.select(

@@ -30,6 +30,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import round6
+# spread every Arrow decode pass: a bare one-split fixture scan otherwise
+# decodes on ONE worker (27 s single-threaded vs ~1.5 s spread for the sf0.1
+# video kernels); round-robin, since 24-row profile frames would collide on
+# a hash key
+from flink_210225_spark.io import spread
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -197,29 +202,6 @@ def _parse_png(payload: bytes) -> dict:
     }
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a (tiny, metadata-sized) pre-decode projection across every
-    core before an Arrow decode pass. The fixture tables scan as a SINGLE
-    parquet split locally, so every ``mapInPandas`` decode downstream of a
-    bare ``docs.select(...)`` otherwise runs on ONE worker — measured 27 s
-    single-threaded vs ~1.5 s spread for the sf0.1 video kernels (r9 bench
-    root-cause: the top bench offenders were all decode ops pinned to one
-    core). Round-robin repartition of the metadata rows costs microseconds
-    and distributes evenly even for low-cardinality profile frames (24
-    rows), where a hash key would collide partitions away. On a real
-    cluster the scan already arrives in many splits; one extra exchange of
-    key-sized rows is noise next to the decode it parallelizes — but at
-    100 TB the payload columns make that exchange a full network pass, so
-    it is scale-conditional (VERDICT r10 #2): skipped when the scan
-    already arrives in enough file splits (io.few_input_splits)."""
-    from flink_210225_spark.io import few_input_splits
-
-    if not few_input_splits(df):
-        return df
-    sess = df.sparkSession
-    return df.repartition(sess.sparkContext.defaultParallelism)
-
-
 def _feature_from_samples(values, dim: int = FEATURE_DIM) -> list[float]:
     """Real feature extraction: mean of each of ``dim`` equal slices of the
     decoded sample/pixel stream, scaled to [-1, 1] — a deterministic,
@@ -274,7 +256,7 @@ def decode_media(assets: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread(assets).mapInPandas(batches, DECODED_SCHEMA)
+    return spread(assets).mapInPandas(batches, DECODED_SCHEMA)
 
 
 def rebalance_by_size(assets: DataFrame, target_partition_bytes: int = 128 << 20) -> DataFrame:
@@ -476,7 +458,7 @@ def wav_decode_documents(tables: dict[str, DataFrame]) -> DataFrame:
                 out["peak"].append(int(np.abs(s).max()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, sample_rate long, n_channels long, n_frames long, "
         "sum_sq long, peak long",
@@ -554,7 +536,7 @@ def wav_segment_features(
                     out["peak"].append(int(np.abs(seg).max()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, seg_idx long, seg_samples long, sum_sq long, peak long",
     )
@@ -615,7 +597,7 @@ def wav_dft_audit(tables: dict[str, DataFrame]) -> DataFrame:
                 out["symmetry_ok"].append(bool(sym_err <= 1e-6 * scale))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, n_frames long, dc long, sum_sq long, "
         "parseval_ok boolean, symmetry_ok boolean",
@@ -651,7 +633,7 @@ def png_decode_documents(tables: dict[str, DataFrame]) -> DataFrame:
                 out["px_max"].append(int(px.max()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, width long, height long, color_type long, "
         "px_sum long, px_max long",
@@ -729,7 +711,7 @@ def png_container_audit(tables: dict[str, DataFrame]) -> DataFrame:
                 out["crc_ok"].append(bool(ok))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, width long, height long, bit_depth long,"
         " n_chunks long, crc_ok boolean",
@@ -780,7 +762,7 @@ def png_tile_features(tables: dict[str, DataFrame], tile: int = 8) -> DataFrame:
                         out["px_max"].append(int(patch.max()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, tile_x long, tile_y long, tile_w long, tile_h long, "
         "px_sum long, px_max long",
@@ -836,7 +818,7 @@ def image_quantize_palette(tables: dict[str, DataFrame]) -> DataFrame:
                     out["sq_err"].append(qq - 2 * pal * s + n * pal * pal)
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen, "asset_id long, band long, n_px long, palette long, sq_err long"
     )
 
@@ -883,7 +865,7 @@ def audio_vad_segments(
                     out["active"].append(bool(e * n_frames > total))
             yield pd.DataFrame(out)
 
-    frames = _spread(base).mapInPandas(
+    frames = spread(base).mapInPandas(
         gen, "asset_id long, frame_idx long, energy long, active boolean"
     )
     from pyspark.sql import Window
@@ -946,7 +928,7 @@ def audio_fingerprint(tables: dict[str, DataFrame]) -> DataFrame:
                     out["word"].append(int(wd))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(gen, "asset_id long, frame_idx long, word long")
+    return spread(base).mapInPandas(gen, "asset_id long, frame_idx long, word long")
 
 
 def image_ahash_groups(tables: dict[str, DataFrame]) -> DataFrame:
@@ -995,7 +977,7 @@ def image_ahash_groups(tables: dict[str, DataFrame]) -> DataFrame:
                 hashes.append(int((bits << np.arange(16)).sum()))
             yield pd.DataFrame({"asset_id": ids, "ahash": hashes})
 
-    hashed = _spread(base).mapInPandas(gen, "asset_id long, ahash long")
+    hashed = spread(base).mapInPandas(gen, "asset_id long, ahash long")
     from pyspark.sql import Window
 
     wg = Window.partitionBy("ahash")
@@ -1067,7 +1049,7 @@ def image_whash_groups(tables: dict[str, DataFrame]) -> DataFrame:
                 {"asset_id": ids, "whash": hashes, "dc": dcs, "n_pos": npos}
             )
 
-    hashed = _spread(base).mapInPandas(gen, "asset_id long, whash long, dc long, n_pos long")
+    hashed = spread(base).mapInPandas(gen, "asset_id long, whash long, dc long, n_pos long")
     from pyspark.sql import Window
 
     wg = Window.partitionBy("whash")
@@ -1125,7 +1107,7 @@ def video_scene_cuts(tables: dict[str, DataFrame]) -> DataFrame:
                     out["framesum"].append(int(px.sum()))
             yield pd.DataFrame(out)
 
-    frames = _spread(base).mapInPandas(gen, "asset_id long, frame_idx long, framesum long")
+    frames = spread(base).mapInPandas(gen, "asset_id long, frame_idx long, framesum long")
     from pyspark.sql import Window
 
     worder = Window.partitionBy("asset_id").orderBy("frame_idx")
@@ -1202,7 +1184,7 @@ def video_keyframes(tables: dict[str, DataFrame]) -> DataFrame:
     # Python worker (Pandas subtrees never canonicalize equal, so
     # ReuseExchange cannot dedup them). 4 longs per frame, tiny.
     frames = (
-        _spread(base)
+        spread(base)
         .mapInPandas(
             gen, "asset_id long, frame_idx long, framesum long, framesq long"
         )
@@ -1428,7 +1410,7 @@ def image_histogram_stats(tables: dict[str, DataFrame]) -> DataFrame:
     # consumer replays the per-doc PNG decode pass (opaque Pandas subtree,
     # no ReuseExchange). 16 small rows per doc, tiny to materialize.
     hist = (
-        _spread(base)
+        spread(base)
         .mapInPandas(gen, "doc_id long, seed int, bin int, ct long, n_px long")
         .localCheckpoint(eager=True)
     )
@@ -1517,7 +1499,7 @@ def audio_onsets(
                     out["energy"].append(e)
             yield pd.DataFrame(out)
 
-    frames = _spread(base).mapInPandas(gen, "asset_id long, frame_idx long, energy long")
+    frames = spread(base).mapInPandas(gen, "asset_id long, frame_idx long, energy long")
     from pyspark.sql import Window
 
     w = Window.partitionBy("asset_id").orderBy("frame_idx")
@@ -1582,7 +1564,7 @@ def image_sharpness(tables: dict[str, DataFrame]) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    g = _spread(base).mapInPandas(
+    g = spread(base).mapInPandas(
         gen,
         "doc_id long, seed int, n_grads long, grad_sum long, n_edges long",
     )
@@ -2407,7 +2389,7 @@ def image_contrast(tables: dict[str, DataFrame]) -> DataFrame:
                 out["max_p"].append(int(px.max()))
             yield pd.DataFrame(out)
 
-    stats = _spread(base).mapInPandas(
+    stats = spread(base).mapInPandas(
         gen,
         "doc_id long, seed int, n_px long, sum_p long, sum_p2 long, "
         "min_p long, max_p long",
@@ -2476,7 +2458,7 @@ def audio_clipping(tables: dict[str, DataFrame]) -> DataFrame:
                 out["max_run"].append(int(max_run))
             yield pd.DataFrame(out)
 
-    stats = _spread(base).mapInPandas(
+    stats = spread(base).mapInPandas(
         gen, "asset_id long, n_samples long, n_clipped long, max_run long"
     )
     return stats.select(
@@ -2541,7 +2523,7 @@ def video_fingerprint_groups(tables: dict[str, DataFrame]) -> DataFrame:
                 out["sig"].append(",".join(sums))
             yield pd.DataFrame(out)
 
-    sigs = _spread(profiles).mapInPandas(gen, "profile int, sig string")
+    sigs = spread(profiles).mapInPandas(gen, "profile int, sig string")
     clips = docs.select(
         "doc_id", (F.col("doc_id") % 24).cast("int").alias("profile")
     )
@@ -2742,7 +2724,7 @@ def image_border_detect(tables: dict[str, DataFrame]) -> DataFrame:
                 out["pad_right"].append(int(w - 1 - nzc[-1]) if nzc.size else 0)
             yield pd.DataFrame(out)
 
-    stats = _spread(base).mapInPandas(
+    stats = spread(base).mapInPandas(
         gen,
         "doc_id long, seed int, w long, h long, pad_top long, "
         "pad_bottom long, pad_left long, pad_right long",
@@ -2862,7 +2844,7 @@ def image_entropy_stats(tables: dict[str, DataFrame]) -> DataFrame:
                 out["coll2"].append(int((hist.astype(np.int64) ** 2).sum()))
             yield pd.DataFrame(out)
 
-    prof = _spread(seeds).mapInPandas(
+    prof = spread(seeds).mapInPandas(
         gen, "seed int, n_px long, distinct_vals long, coll2 long"
     )
     n2 = F.col("n_px") * F.col("n_px")
@@ -2963,7 +2945,7 @@ def audio_snr_estimate(tables: dict[str, DataFrame], frame: int = 32) -> DataFra
                 out["e_min"].append(int(e.min()))
             yield pd.DataFrame(out)
 
-    dec = _spread(base).mapInPandas(
+    dec = spread(base).mapInPandas(
         gen, "asset_id long, n_frames long, e_max long, e_min long"
     )
     snr = F.when(
@@ -3049,7 +3031,7 @@ def image_resize_stats(tables: dict[str, DataFrame]) -> DataFrame:
                 out["ds_max"].append(int(ds.max()))
             yield pd.DataFrame(out)
 
-    prof = _spread(seeds).mapInPandas(
+    prof = spread(seeds).mapInPandas(
         gen, "seed int, out_w int, out_h int, ds_sum long, ds_max long"
     )
     return (
@@ -3131,7 +3113,7 @@ def audio_downsample_stats(tables: dict[str, DataFrame]) -> DataFrame:
                 out["s_max"].append(int(ds.max()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen, "asset_id long, n_out long, s_sum long, s_min long, s_max long"
     )
 
@@ -3221,7 +3203,7 @@ def image_near_dup_groups(tables: dict[str, DataFrame]) -> DataFrame:
                 {"doc_id": pdf["doc_id"], "h_lo": los, "h_hi": his}
             )
 
-    hashed = _spread(base).mapInPandas(gen, "doc_id long, h_lo long, h_hi long")
+    hashed = spread(base).mapInPandas(gen, "doc_id long, h_lo long, h_hi long")
     # localCheckpoint (r11, the video_keyframes/image_histogram class):
     # prof feeds FOUR derivations (both self-join sides via bands, selfp,
     # and allp is itself consumed 3x) and Pandas subtrees defeat
@@ -3445,7 +3427,7 @@ def video_motion_stats(tables: dict[str, DataFrame]) -> DataFrame:
                 out["n_zero"].append(sum(1 for d in deltas if d == 0))
             yield pd.DataFrame(out)
 
-    stats = _spread(profiles).mapInPandas(
+    stats = spread(profiles).mapInPandas(
         gen,
         "profile int, n_frames int, motion long, max_delta long, n_zero long",
     )
@@ -3690,7 +3672,7 @@ def image_ssim_pairs(tables: dict[str, DataFrame]) -> DataFrame:
                 out["sab"].append(int((a * b).sum()))
             yield pd.DataFrame(out)
 
-    stats = _spread(cls).mapInPandas(
+    stats = spread(cls).mapInPandas(
         gen,
         "seed int, pert int, prow int, ft int,"
         " sa long, sb long, saa long, sbb long, sab long",
@@ -3820,7 +3802,7 @@ def decode_error_sideoutput(tables: dict[str, DataFrame]) -> DataFrame:
                 out["px_sum"].append(s)
             yield pd.DataFrame(out)
 
-    decoded = _spread(base).mapInPandas(gen, "doc_id long, status string, px_sum long")
+    decoded = spread(base).mapInPandas(gen, "doc_id long, status string, px_sum long")
     return decoded.groupBy("status").agg(
         F.count("*").cast("long").alias("n_blobs"),
         F.sum("px_sum").cast("long").alias("px_sum"),
@@ -3917,7 +3899,7 @@ def image_phash_groups(tables: dict[str, DataFrame]) -> DataFrame:
                 {"asset_id": ids, "phash": hashes, "dc_sum": dcs}
             )
 
-    hashed = _spread(base).mapInPandas(gen, "asset_id long, phash long, dc_sum long")
+    hashed = spread(base).mapInPandas(gen, "asset_id long, phash long, dc_sum long")
     from pyspark.sql import Window
 
     wg = Window.partitionBy("phash")
@@ -4047,7 +4029,7 @@ def audio_zcr_stats(tables: dict[str, DataFrame]) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, n_frames long, n_crossings long, n_runs long, "
         "longest_run long, zcr_micro long",
@@ -4166,7 +4148,7 @@ def image_integral_audit(tables: dict[str, DataFrame]) -> DataFrame:
                     out["total_sum"].append(total)
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen, "asset_id long, box_id long, box_sum long, total_sum long"
     )
 
@@ -4271,7 +4253,7 @@ def image_morphology_audit(tables: dict[str, DataFrame]) -> DataFrame:
                 out["gradient"].append(int(dil.sum() - ero.sum()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, n_px long, n_fg long, n_eroded long,"
         " n_dilated long, gradient long",
@@ -4401,7 +4383,7 @@ def image_otsu_threshold(tables: dict[str, DataFrame]) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, otsu_t long, n_below long, n_above long,"
         " mean_below_micro long, mean_above_micro long",
@@ -4529,7 +4511,7 @@ def image_sobel_energy(tables: dict[str, DataFrame]) -> DataFrame:
                 out["n_edge"].append(int((e >= 128).sum()))
             yield pd.DataFrame(out)
 
-    return _spread(base).mapInPandas(
+    return spread(base).mapInPandas(
         gen,
         "asset_id long, n_interior long, grad_abs_sum long, grad_max long,"
         " n_edge long",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import round6
+from flink_210225_spark.io import spread
 
 # First hex char of md5(text) → 16 equiprobable buckets:
 # 0-9,a,b = train (75%), c,d = val (12.5%), e,f = test (12.5%).
@@ -701,21 +702,10 @@ def poisson_bootstrap(tables: dict[str, DataFrame]) -> DataFrame:
     orders = tables["orders"]
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     base = orders.select(F.col("o_orderkey").alias("k"), cents.alias("v"))
-    # Repartition BEFORE the B-way explode: the fixture scan is one parquet
-    # split locally, so the explode + per-row md5 otherwise runs on ONE core
-    # (r10 wave 2; the doc_shingles/_spread discipline). One cheap exchange
-    # of (k, v) rows buys full parallelism for the 32× expansion.
-    # Scale-conditional (VERDICT r10 #2): skipped when the scan already
-    # arrives in enough file splits — see io.few_input_splits.
-    from flink_210225_spark.io import few_input_splits
-
-    spread = (
-        base.repartition(orders.sparkSession.sparkContext.defaultParallelism)
-        if few_input_splits(base)
-        else base
-    )
     b_col = F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("b")
-    ex = spread.select("k", "v", b_col)
+    # spread BEFORE the B-way explode: the explode + per-row md5 otherwise run
+    # on the single local scan split
+    ex = spread(base).select("k", "v", b_col)
     h = F.conv(
         F.substring(F.md5(F.concat_ws("|", F.col("k"), F.col("b"))), 1, 4),
         16,

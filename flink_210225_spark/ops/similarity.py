@@ -22,6 +22,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_210225_spark.functions.scalars import round6
+# spread only row-level arithmetic paths; never spread order-sensitive
+# float folds (ivf_assign / pq_train partial sums feed exact-hash twins like
+# sim_pq_k1_identity — repartitioning reorders them and moves centroids by ulps)
+from flink_210225_spark.io import spread
 
 DIM = 64
 
@@ -45,30 +49,6 @@ def _quantize_longs(vv: Column, levels: int) -> Column:
         return F.transform(vv, lambda x: F.floor(x / scale + 0.5).cast("long"))
 
     return F.get(F.transform(F.array(maxabs), with_m), 0)
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the corpus side of a scoring join across every core
-    BEFORE the heavy per-row work (norm/dot folds, ADC sums, bucket
-    exprs). The fixture tables scan as a SINGLE parquet split locally
-    (one row group), so the 20×corpus GEMM fold + pre-shuffle sort +
-    partial WindowGroupLimit downstream of a broadcast join otherwise run
-    on ONE task (the multimodal._spread / doc_shingles root-cause, r9-r10
-    bench). One exchange of (id, vector) rows buys the whole scoring
-    stage full parallelism; on a real cluster the scan already arrives in
-    many splits and this is a cheap rebalance. ONLY applied to row-level
-    arithmetic paths: kernels whose reductions are order-sensitive
-    (ivf_assign / pq_train partial-sum folds feeding exact-hash twins
-    like sim_pq_k1_identity) must NOT be spread — repartitioning reorders
-    their float partial sums and shifts centroids by ulps.
-
-    Scale-conditional (VERDICT r10 #2): skipped when the scan already
-    arrives in enough file splits — see io.few_input_splits."""
-    from flink_210225_spark.io import few_input_splits
-
-    if not few_input_splits(df):
-        return df
-    sess = df.sparkSession
-    return df.repartition(sess.sparkContext.defaultParallelism)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -95,7 +75,7 @@ def cosine_topk(
     )
     # corpus side spread BEFORE the norm/dot projections (query side stays
     # on the bare scan so the vec_id pushdown survives)
-    n = with_norm(_spread(tables["embeddings"])).select(
+    n = with_norm(spread(tables["embeddings"])).select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn")
     )
     cos = _dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))
@@ -126,7 +106,7 @@ def mips_topk(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     # corpus side spread (the cosine_topk discipline)
-    n = with_norm(_spread(tables["embeddings"])).select(
+    n = with_norm(spread(tables["embeddings"])).select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")
     )
     dot = _dot(F.col("qv"), F.col("nv"))
@@ -199,7 +179,7 @@ def mips_ann_topk(
     # corpus side spread BEFORE the augmentation/bucket projections (the
     # cosine_topk discipline); the agg above and the query side keep the
     # bare scan
-    corpus = with_norm(_spread(tables["embeddings"])).select(
+    corpus = with_norm(spread(tables["embeddings"])).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("nv"),
         lsh_bucket(aug_corpus, bits).alias("nbucket"),
@@ -314,7 +294,7 @@ def lsh_ann_topk(
     # corpus side spread BEFORE the norm/bucket projections (the
     # cosine_topk discipline); query side stays on the bare scan
     n = (
-        with_norm(_spread(tables["embeddings"]))
+        with_norm(spread(tables["embeddings"]))
         .withColumn("bucket", lsh_bucket(F.col("v"), bits))
         .select(
             F.col("vec_id").alias("neighbor_id"),
@@ -480,8 +460,8 @@ def ivf_ann_topk(
     # assignment pass emits one partition per input split (one, locally),
     # so the probe join's scoring fold otherwise runs on one task. Safe:
     # row-level arithmetic only (the centroid training itself is NOT
-    # spread — see _spread's order-sensitivity note).
-    n = _spread(assigned).select(
+    # spread: never spread order-sensitive float folds).
+    n = spread(assigned).select(
         F.col("vec_id").alias("neighbor_id"),
         _as_double(F.col("embedding")).alias("nv"),
         "cell",
@@ -998,11 +978,11 @@ def ivf_pq_ann_topk(
         rows, "query_id long, cells array<int>, tab array<double>"
     ).select("query_id", F.explode("cells").alias("cell"), "tab")
 
-    # _spread: the codes⋈cell join of two single-partition Arrow outputs
+    # spread: the codes⋈cell join of two single-partition Arrow outputs
     # AQE-coalesces back to one task — round-robin it so the ADC fold and
     # the shortlist's pre-shuffle sort run on every core (row-level
     # arithmetic only; the PQ/IVF training passes stay unspread).
-    corpus = _spread(
+    corpus = spread(
         codes_df.join(assigned.select(F.col("vec_id"), "cell"), "vec_id")
     ).select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
 
@@ -1121,8 +1101,8 @@ def ivf_pq_residual_ann_topk(
             rows.append((int(qid), int(cell), [float(x) for x in tab.ravel()]))
     q = spark.createDataFrame(rows, "query_id long, cell int, tab array<double>")
 
-    # _spread: same single-task ADC-fold fix as ivf_pq_ann_topk
-    corpus = _spread(
+    # spread: same single-task ADC-fold fix as ivf_pq_ann_topk
+    corpus = spread(
         codes_df.join(res.select("vec_id", "cell"), "vec_id")
     ).select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
 

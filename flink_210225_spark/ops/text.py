@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from flink_210225_spark.functions.scalars import round6
+from flink_210225_spark.io import spread
 
 # Corpus-scale multi-consumer checkpoints go to disk, not heap (VERDICT
 # r10 #4): replication-1 local blocks either way, but DISK_ONLY keeps a
@@ -37,29 +38,6 @@ _FP_MOD = 2147483647  # 2^31 - 1
 
 def tokens_col(text: Column) -> Column:
     return F.split(F.trim(text), TOKEN_SPLIT_RE)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin a (small, doc-metadata-sized) frame across every core
-    before a tokenize/explode-heavy projection. The fixture docs scan as a
-    SINGLE parquet split locally (one row group), so token explodes and
-    their map-side partial aggregations otherwise run on ONE task (the
-    multimodal._spread / dedup.doc_shingles root-cause — text.py's heavy
-    consumers were the remaining family). One exchange of (doc_id, text)
-    rows buys the whole tokenize stage full parallelism; on a real cluster
-    the scan already arrives in many splits and this is a cheap rebalance.
-    Applied only where downstream aggregates are partition-order-safe
-    (integer counts, or floored doubles re-verified vs the oracle at all
-    three SFs after the change).
-
-    Scale-conditional (VERDICT r10 #2): skipped when the scan already
-    arrives in enough file splits — see io.few_input_splits."""
-    from flink_210225_spark.io import few_input_splits
-
-    if not few_input_splits(df):
-        return df
-    sess = df.sparkSession
-    return df.repartition(sess.sparkContext.defaultParallelism)
 
 
 def token_stats(tables: dict[str, DataFrame]) -> DataFrame:
@@ -847,7 +825,9 @@ def langid_trigram(
     #     profile join.
     # The duplicated explode is a 400-char-bounded projection — far cheaper
     # than the exchanges the shared shape adds.
-    spread_head = _spread(head)
+    # spread: both trigram explodes otherwise run on the single local scan
+    # split (integer counts — partition-order-safe)
+    spread_head = spread(head)
     counts = (
         spread_head.select("lang", F.explode(tri).alias("tg"))
         .groupBy("lang", "tg")
@@ -1069,9 +1049,9 @@ def dsir_weights(
     broadcasts. One corpus scan → (bucket, is_target) map-side-combined
     counts; totals fold into one scalar constant; broadcast join + doc agg."""
     docs = tables["documents"]
-    # _spread: the tokenize explode + (doc, bucket) partial agg otherwise
+    # spread: the tokenize explode + (doc, bucket) partial agg otherwise
     # run on the single local scan split
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         "doc_id",
         (F.col("source") == target_source).alias("is_target"),
         F.explode(tokens_col(F.col("text"))).alias("tok"),
@@ -1599,9 +1579,9 @@ def perplexity_filter(tables: dict[str, DataFrame]) -> DataFrame:
     agg. The threshold scalar replays the scoring subplan once — two
     corpus-shaped passes total, both map-side-combined."""
     docs = tables["documents"].select("doc_id", "text")
-    # _spread: the bigram explode + (doc, w1, w2) partial agg feeding the
+    # spread: the bigram explode + (doc, w1, w2) partial agg feeding the
     # checkpoint otherwise run on the single local scan split
-    base = _spread(docs).select(
+    base = spread(docs).select(
         "doc_id", tokens_col(F.col("text")).alias("toks")
     ).where(F.size("toks") >= 2)
     pairs = base.select(
@@ -6318,11 +6298,11 @@ def char_entropy(tables: dict[str, DataFrame]) -> DataFrame:
     Scale: per-row split to characters rides the scan; the shuffles
     carry (lang, char) and (lang, bigram) — alphabet-bounded domains,
     never corpus rows."""
-    # _spread: both char/bigram explodes + their (lang, token) partial
+    # spread: both char/bigram explodes + their (lang, token) partial
     # aggs otherwise run on the single local scan split (counts are exact
     # BIGINTs — partition-order-safe); the two branches share the one
     # round-robin Exchange via ReuseExchange
-    docs = _spread(tables["documents"])
+    docs = spread(tables["documents"])
     # length >= 1 guard: sequence(1, 0) descends on Spark (phantom ''
     # rows per empty doc) where DuckDB's range is empty
     chars = docs.where(F.length("text") >= 1).select(
@@ -6576,11 +6556,11 @@ def mrr_ndcg_eval(
     # broadcast twice, the doc-token explode, and the bigram join-back) and
     # tokenize+bigram generation dominates each branch's cost — without it
     # the corpus re-tokenizes per branch (multi-consumer discipline).
-    # _spread: the tokenize+bigram transform is the heavy per-row work and
+    # spread: the tokenize+bigram transform is the heavy per-row work and
     # otherwise materializes the checkpoint on the single local scan split
     # DISK_ONLY (r11, VERDICT r10 #4): base holds tokens+bigrams arrays per
     # doc (corpus-scale) — keep the 4-consumer reuse, drop the heap pin.
-    base = _spread(docs).select(
+    base = spread(docs).select(
         "doc_id", toks.alias("toks"), bigrams(raw).alias("bgs")
     ).localCheckpoint(eager=True, storageLevel=_DISK_ONLY)
     q = base.where(F.col("doc_id") < num_queries).select(

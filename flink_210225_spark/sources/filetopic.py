@@ -46,6 +46,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from flink_210225_spark.io import _scratch
+
 TOPIC_SCHEMA = "value string"
 
 
@@ -294,7 +296,7 @@ def topic_roundtrip_lang_counts(tables):
 
     from pyspark.sql import functions as F
 
-    from flink_210225_spark.streaming.pipelines import _scratch, _stage_fixture
+    from flink_210225_spark.streaming.pipelines import _stage_fixture
 
     docs = tables["documents"]
     spark = docs.sparkSession

@@ -28,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_210225_spark.io import _scratch
+
 
 def jsonl_dirty_counts(tables: dict[str, DataFrame]) -> DataFrame:
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     js = ev.select(
@@ -86,8 +86,6 @@ def csv_dirty_counts(tables: dict[str, DataFrame]) -> DataFrame:
     owns the corruption rule in an expression the optimizer cannot prune
     away. Numeric round trip via the writer's shortest repr keeps cents
     exact; one text scan, zero shuffle before the final rollup."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     line = F.concat_ws(
@@ -135,8 +133,6 @@ def fixed_width_counts(tables: dict[str, DataFrame]) -> DataFrame:
     One text scan, zero shuffle before the rollup (the same economics as
     the CSV twin; like there, the reject rule lives in an expression the
     optimizer cannot prune away)."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     o = tables["orders"]
     spark = o.sparkSession
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
@@ -189,8 +185,6 @@ def multiline_stack_counts(tables: dict[str, DataFrame]) -> DataFrame:
     exact reconstruction, newlines included, while the oracle builds the
     same records directly from parquet (independent algorithms: islands
     reassembly vs direct construction)."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     us = F.timestamp_diff(
@@ -289,8 +283,6 @@ def schema_evolution_counts(tables: dict[str, DataFrame]) -> DataFrame:
 
     Scale: footer merging is a driver-side metadata pass over file
     schemas, not data; the scan itself stays columnar and pruned."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     o = tables["orders"]
     spark = o.sparkSession
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
@@ -398,8 +390,6 @@ def xml_records_counts(tables: dict[str, DataFrame]) -> DataFrame:
 
     Scale: one splittable text scan, regex projection in codegen, one
     rollup — zero shuffles before the final group."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     o = tables["orders"]
     spark = o.sparkSession
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
@@ -459,8 +449,6 @@ def orc_roundtrip_counts(tables: dict[str, DataFrame]) -> DataFrame:
     Scale: ORC is splittable and predicate-pushdown-capable like parquet;
     the scan stays columnar — this gates the FORMAT, the plan is one
     map-side-combined groupBy."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     o = tables["orders"]
     spark = o.sparkSession
     out = _scratch(prefix="orc_src_")
@@ -507,8 +495,6 @@ def partition_prune_counts(tables: dict[str, DataFrame]) -> DataFrame:
 
     Scale: pruning is metadata-only (driver directory listing); the result
     is one map-side-combined groupBy over the surviving partitions."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     out = _scratch(prefix="partsrc_")
@@ -564,8 +550,6 @@ def jsonl_nested_counts(tables: dict[str, DataFrame]) -> DataFrame:
 
     Scale: JSONL is splittable per line; the explode multiplies rows by
     items-per-order (bounded fan-out), and the rollup map-side combines."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     o = tables["orders"]
     li = tables["lineitem"]
     spark = o.sparkSession
@@ -648,8 +632,6 @@ def jsonl_gzip_counts(tables: dict[str, DataFrame]) -> DataFrame:
     .json.gz would serialize the whole scan onto one core; the write side
     must shard (here 8 files, proving the multi-file read path). The
     rollup itself is one map-side-combined groupBy."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     out = _scratch(prefix="jsonl_gz_")
@@ -705,8 +687,6 @@ def binary_files_counts(tables: dict[str, DataFrame]) -> DataFrame:
     import os
 
     from flink_210225_spark.ops.multimodal import _parse_png, _png_bytes
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     docs = tables["documents"]
     spark = docs.sparkSession
     ids = [
@@ -784,8 +764,6 @@ def incremental_listing(tables: dict[str, DataFrame]) -> DataFrame:
     Scale: listing is object-store metadata (cheap); the anti-join keys on
     file name — manifest-sized, broadcastable; data files are read once
     each across all cycles, which is the entire point."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     root = _scratch(prefix="incr_listing_")
@@ -986,8 +964,6 @@ def csv_quoting_roundtrip(tables: dict[str, DataFrame]) -> DataFrame:
     Exactness: counts, cents, and length checksums are exact integers;
     the oracle recomputes the tricky-field length arithmetically from
     the parquet columns the field was built from."""
-    from flink_210225_spark.streaming.pipelines import _scratch
-
     ev = tables["events"]
     spark = ev.sparkSession
     tricky = F.concat(

@@ -26,16 +26,18 @@ from __future__ import annotations
 import os
 import tempfile
 from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from datetime import date, timedelta
 from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_210225_spark.io import one_row_df
+from flink_210225_spark.io import _scratch, one_row_df
 from flink_210225_spark.operators import router as router_ops
 
 
@@ -56,12 +58,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.symlink(src, link)
     stream = spark.readStream.schema(batch.schema).parquet(link_dir)
     if dict(stream.dtypes).get("ts") == "bigint":
-        # `div` (long integer division) — floor(ts/1000) rounds through
-        # double and flips microseconds; keep identical to io.load_table so
-        # stream==batch parity holds on raw ts values.
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
-        )
+        stream = stream.withColumn("ts", _events_ts(True, "timestamp_ntz"))
     return stream
 
 
@@ -1119,12 +1116,6 @@ def pattern_stream(
     )
 
 
-
-
-
-from contextlib import contextmanager
-
-
 @contextmanager
 def _stream_shuffle(spark: SparkSession, n: str = "8"):
     """Scoped shuffle-partition override for the STATE-STORE streaming
@@ -1161,43 +1152,53 @@ def _stage_fixture(df: DataFrame, srcdir: str, stem: str) -> None:
         os.symlink(local, os.path.join(srcdir, f"{stem}_{i}.parquet"))
 
 
-_SCRATCH_ROOT = None
+def _events_ts(ts_is_long: bool, cast: str = "timestamp") -> Column:
+    """The events ``ts`` column as a ``cast`` timestamp. A bigint ts is
+    TIMESTAMP(NANOS) read through nanosAsLong: ``div`` (long integer
+    division) keeps it identical to io.load_table — ``floor(ts / 1000)``
+    rounds through double and flips microseconds — so stream==batch parity
+    holds on raw ts values."""
+    src = F.expr("timestamp_micros(ts div 1000)") if ts_is_long else F.col("ts")
+    return src.cast(cast)
 
 
-def _scratch(prefix: str) -> str:
-    """Session-scoped scratch dir for the materialized streaming queries:
-    every output/checkpoint/landing dir lives under ONE root that is
-    removed at interpreter exit, so repeated bench/pytest runs cannot
-    accumulate fixture-sized parquet + state-store copies in /tmp.
-    Cleanup must be deferred to exit: the returned DataFrames read the
-    materialized parquet LAZILY, so deleting right after return would
-    break the caller's collect."""
-    global _SCRATCH_ROOT
-    if _SCRATCH_ROOT is None:
-        import atexit
-        import shutil
+def _link_sentinel(
+    spark: SparkSession, cols: list[tuple], srcdir: str, i: int, prefix: str
+) -> None:
+    """Write one lone sentinel row (``cols`` as for ``one_row_df``) and
+    hard-link it into ``srcdir`` as ``sentinel_{i}.parquet`` — a hard link,
+    not a symlink, so the file's mtime is NOW and the file source orders it
+    after every staged fixture file."""
+    sdir = _scratch(prefix=f"{prefix}_sentinel{i}_")
+    one_row_df(spark, cols).coalesce(1).write.mode("overwrite").parquet(sdir)
+    part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
+    os.link(os.path.join(sdir, part), os.path.join(srcdir, f"sentinel_{i}.parquet"))
 
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="stream_scratch_")
-        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+_HOUR_SENTINELS = (timedelta(hours=2), timedelta(hours=4))
 
 
 def _staged_sentinel_stream(
     ev: DataFrame,
     prefix: str,
-    hours: tuple[int, ...] = (2, 4),
+    offsets: tuple[timedelta, ...] = _HOUR_SENTINELS,
     normalize_ts: bool = True,
+    replays: int = 1,
 ):
-    """The sentinel/staging protocol every events-replay capstone shares
-    (extracted — it existed as four verbatim copies, and NOTES records a
-    sentinel-granularity bug that had to be chased through copies):
-    stage the events fixture into a scratch source dir, append one lone
-    far-future sentinel row per entry of ``hours`` (+Nh past the fixture
+    """The sentinel/staging protocol every events-replay capstone shares:
+    stage the events fixture into a scratch source dir ``replays`` times
+    (``events_*``, or ``replay_a_*``, ``replay_b_*``, …), append one lone
+    far-future sentinel row per entry of ``offsets`` (past the fixture
     max; user_id −1 / event_type '__sentinel__'), and open the
-    one-file-per-trigger stream over it. Sentinels advance the watermark
-    so final windows/state flush across micro-batch boundaries; they are
-    dropped on READ-BACK, never pre-agg (Catalyst pushes filters below
-    the EventTimeWatermark operator). Returns (spark, stream, out, cp).
+    one-file-per-trigger stream over it. Sentinels advance the
+    watermark so final windows/state flush across micro-batch boundaries;
+    they are dropped on READ-BACK, never pre-agg (Catalyst pushes filters
+    below the EventTimeWatermark operator). An empty fixture gets no
+    sentinels: there is nothing to flush and no max to offset from.
+
+    Returns ``(stream, scal)``: ``scal`` is the one driver collect —
+    ``max_ts`` (raw units) plus the ``lo``/``hi`` event day (yyyy-MM-dd,
+    None with no rows) that span-sized watermark delays are built from.
 
     ``normalize_ts=False`` leaves a non-bigint ts column untouched
     (TIMESTAMP_NTZ) for consumers whose kernels diff timestamps
@@ -1206,48 +1207,64 @@ def _staged_sentinel_stream(
     spark = ev.sparkSession
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(*_local_paths(ev))
-    max_ts = raw.agg(F.max("ts")).collect()[0][0]
     ts_is_long = dict(raw.dtypes)["ts"] == "bigint"
-    out = _scratch(prefix=f"{prefix}_out_")
-    cp = _scratch(prefix=f"{prefix}_cp_")
+    day = F.date_format(_events_ts(ts_is_long), "yyyy-MM-dd")
+    scal = raw.agg(
+        F.max("ts").alias("max_ts"), F.min(day).alias("lo"), F.max(day).alias("hi")
+    ).collect()[0]
     srcdir = _scratch(prefix=f"{prefix}_src_")
-    _stage_fixture(ev, srcdir, "events")
-    for i, hrs in enumerate(hours):
-        if ts_is_long:
-            sent_ts = max_ts + hrs * 3_600_000_000_000
-        else:
-            from datetime import timedelta
-
-            sent_ts = max_ts + timedelta(hours=hrs)
+    for r in range(replays):
+        _stage_fixture(ev, srcdir, "events" if replays == 1 else f"replay_{chr(97 + r)}")
+    max_ts = scal["max_ts"]
+    for i, off in enumerate(offsets if max_ts is not None else ()):
+        sent_ts = max_ts + (off // timedelta(microseconds=1) * 1000 if ts_is_long else off)
         sent_vals = [-(i + 1), sent_ts, -1, "__sentinel__", 0.0, "{}"]
         # loud arity check — zip would silently truncate if the events
         # fixture ever grows a column, writing a narrower sentinel parquet
-        # (the old createDataFrame(..., raw.schema) raised here)
         if len(raw.dtypes) != len(sent_vals):
             raise ValueError(
                 f"sentinel arity {len(sent_vals)} != events schema {raw.dtypes}"
             )
-        sent = one_row_df(
-            spark, [(n, dt, v) for (n, dt), v in zip(raw.dtypes, sent_vals)]
-        )
-        sdir = _scratch(prefix=f"{prefix}_sentinel{i}_")
-        sent.coalesce(1).write.mode("overwrite").parquet(sdir)
-        part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
-        # hard link (not symlink) so the file's mtime is NOW → the file
-        # source orders it after the fixture file
-        os.link(os.path.join(sdir, part), os.path.join(srcdir, f"sentinel_{i}.parquet"))
+        cols = [(n, dt, v) for (n, dt), v in zip(raw.dtypes, sent_vals)]
+        _link_sentinel(spark, cols, srcdir, i, prefix)
     stream = (
         spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcdir)
     )
-    if ts_is_long:
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp")
+    if ts_is_long or normalize_ts:
+        stream = stream.withColumn("ts", _events_ts(ts_is_long))
+    return stream, scal
+
+
+def _span_delay_days(scal) -> int:
+    """Watermark delay (days) covering the whole fixture span plus margin,
+    from ``_staged_sentinel_stream``'s lo/hi days; any delay fits an empty
+    fixture."""
+    if scal["hi"] is None:
+        return 2
+    return (date.fromisoformat(scal["hi"]) - date.fromisoformat(scal["lo"])).days + 2
+
+
+def _sink(df: DataFrame, prefix: str, n: str = "8") -> DataFrame:
+    """Run the streaming frame ``df`` to completion as an availableNow
+    parquet file sink (checkpoint + exactly-once commit log) under
+    ``_stream_shuffle(spark, n)`` and return the sink read back. The read
+    carries ``df``'s schema, so a sink no micro-batch wrote to reads as
+    zero rows instead of failing parquet schema inference."""
+    spark = df.sparkSession
+    out = _scratch(prefix=f"{prefix}_out_")
+    cp = _scratch(prefix=f"{prefix}_cp_")
+    with _stream_shuffle(spark, n):
+        (
+            df.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", cp)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
-    elif normalize_ts:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark, stream, out, cp
+    return spark.read.schema(df.schema).parquet(out)
 
 
 def curation_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1260,8 +1277,6 @@ def curation_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     commit log, partition-by-split layout — sits between the fixture and
     the returned rows, and the DuckDB oracle is the BATCH curation SQL
     filtered to selected: stream == batch, hash-gated by the driver."""
-    import tempfile
-
     docs = tables["documents"]
     spark = docs.sparkSession
     out = _scratch(prefix="curation_stream_out_")
@@ -1292,18 +1307,6 @@ def upsert_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     hash."""
     orders = tables["orders"]
     spark = orders.sparkSession
-    changes = orders.select(
-        F.col("o_custkey").alias("custkey"),
-        # Synthesized event time must be INJECTIVE per key so last-write-wins
-        # has no ambiguous tiebreak between the engines: the day multiplier
-        # (1e10) sits safely above any o_orderkey at any plausible SF, so
-        # (epoch_day, orderkey) -> ts is collision-free.
-        (
-            F.datediff("o_orderdate", F.lit("1970-01-01")).cast("long") * 10000000000
-            + F.col("o_orderkey")
-        ).alias("ts"),
-        F.col("o_orderstatus").alias("status"),
-    )
     srcdir = _scratch(prefix="upsert_stream_src_")
     # ONE pass stages all three date slices (was: three filtered scans +
     # three write jobs): tag each row with its slice index, write
@@ -1315,15 +1318,20 @@ def upsert_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
         .when(F.col("o_orderdate") < "1996-01-01", F.lit(1))
         .otherwise(F.lit(2))
     )
-    orders.select(
+    changes = orders.select(
         F.col("o_custkey").alias("custkey"),
+        # Synthesized event time must be INJECTIVE per key so last-write-wins
+        # has no ambiguous tiebreak between the engines: the day multiplier
+        # (1e10) sits safely above any o_orderkey at any plausible SF, so
+        # (epoch_day, orderkey) -> ts is collision-free.
         (
             F.datediff("o_orderdate", F.lit("1970-01-01")).cast("long") * 10000000000
             + F.col("o_orderkey")
         ).alias("ts"),
         F.col("o_orderstatus").alias("status"),
         slice_idx.alias("slice"),
-    ).repartition("slice").write.mode("overwrite").partitionBy("slice").parquet(srcdir)
+    )
+    changes.repartition("slice").write.mode("overwrite").partitionBy("slice").parquet(srcdir)
     landing = _scratch(prefix="upsert_stream_landing_")
     for i in range(3):
         sdir = os.path.join(srcdir, f"slice={i}")
@@ -1337,7 +1345,7 @@ def upsert_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     dim_dir = _scratch(prefix="upsert_stream_dim_")
     cp = _scratch(prefix="upsert_stream_cp_")
     stream = (
-        spark.readStream.schema(changes.schema)
+        spark.readStream.schema(changes.drop("slice").schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
@@ -1375,12 +1383,8 @@ def dedup_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     DISTINCT md5(text): if cross-batch state ever leaked (batch 2 re-admits
     a digest) the parquet output doubles and the row-count/hash gates
     break."""
-    import tempfile
-
     docs = tables["documents"]
     spark = docs.sparkSession
-    out = _scratch(prefix="dedup_stream_out_")
-    cp = _scratch(prefix="dedup_stream_cp_")
     srcdir = _scratch(prefix="dedup_stream_src_")
     _stage_fixture(docs, srcdir, "replay_a")
     _stage_fixture(docs, srcdir, "replay_b")
@@ -1389,18 +1393,7 @@ def dedup_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(srcdir)
     )
-    with _stream_shuffle(spark):
-        q = (
-            dedup_stream(stream)
-            .select("text_hash")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out)
+    return _sink(dedup_stream(stream).select("text_hash"), "dedup_stream")
 
 
 def window_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1420,9 +1413,7 @@ def window_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     Output = the batch ``window_visitor_stats`` shape (exact UV via
     collect_set — streaming forbids countDistinct; sum 2dp-floored), so the
     oracle is shared with the batch query: stream == batch, hash-gated."""
-    spark, stream, out, cp = _staged_sentinel_stream(
-        tables["events"], "window_stream"
-    )
+    stream, _ = _staged_sentinel_stream(tables["events"], "window_stream")
     # NOTE: no pre-agg sentinel filter — Catalyst pushes filters BELOW the
     # EventTimeWatermark operator (down to the scan), so a filtered sentinel
     # would never advance the watermark and the final real windows would
@@ -1445,16 +1436,7 @@ def window_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
             (F.floor(F.col("sv") * 100 + F.lit(0.5)) / 100).alias("dur_sum"),
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("ch") != "__sentinel__")
+    return _sink(agg, "window_stream").filter(F.col("ch") != "__sentinel__")
 
 
 def join_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1476,8 +1458,6 @@ def join_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     join state holds exactly what the output needs, not whole rows."""
     o, li = tables["orders"], tables["lineitem"]
     spark = o.sparkSession
-    out = _scratch(prefix="join_stream_out_")
-    cp = _scratch(prefix="join_stream_cp_")
     odir = _scratch(prefix="join_stream_osrc_")
     ldir = _scratch(prefix="join_stream_lsrc_")
     _stage_fixture(o, odir, "orders")
@@ -1508,16 +1488,7 @@ def join_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
             / 100
         ).alias("split_amount"),
     )
-    with _stream_shuffle(spark):
-        q = (
-            result.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out)
+    return _sink(result, "join_stream")
 
 
 def stateful_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1536,22 +1507,11 @@ def stateful_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     stream output == batch ``state_jump_detection`` exactly, so the batch
     oracle hash-gates the whole stateful machinery: state carry-over,
     timer registration, timeout emission, file-sink commit log."""
-    spark, stream, out, cp = _staged_sentinel_stream(
+    stream, _ = _staged_sentinel_stream(
         tables["events"], "stateful_stream", normalize_ts=False
     )
-    with _stream_shuffle(spark):
-        q = (
-            jump_detection_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0).select(
-        "event_id", "user_id"
-    )
+    jumps = _sink(jump_detection_stream(stream), "stateful_stream")
+    return jumps.filter(F.col("user_id") >= 0).select("event_id", "user_id")
 
 
 def enrich_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1567,8 +1527,6 @@ def enrich_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     broadcast, or a join-key regression breaks the hash."""
     o, c, n = tables["orders"], tables["customer"], tables["nation"]
     spark = o.sparkSession
-    out = _scratch(prefix="enrich_stream_out_")
-    cp = _scratch(prefix="enrich_stream_cp_")
     srcdir = _scratch(prefix="enrich_stream_src_")
     _stage_fixture(o, srcdir, "orders")
     stream = (
@@ -1595,15 +1553,9 @@ def enrich_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
             F.col("n_name").alias("province_name"),
         )
     )
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    # both dims are broadcast: no shuffle, so the sink's shuffle scope
+    # leaves the task count unchanged
+    return _sink(enriched, "enrich_stream")
 
 
 def funnel_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
@@ -1617,21 +1569,11 @@ def funnel_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     stream shares ``session_funnel_windowed``'s batch oracle — state
     carry-over, buffer release order, and the DP itself all sit under one
     hash."""
-    spark, stream, out, cp = _staged_sentinel_stream(
+    stream, _ = _staged_sentinel_stream(
         tables["events"], "funnel_stream", normalize_ts=False
     )
-    with _stream_shuffle(spark):
-        q = (
-            funnel_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     per_user = (
-        spark.read.parquet(out)
+        _sink(funnel_stream(stream), "funnel_stream")
         .filter(F.col("user_id") >= 0)
         .groupBy("user_id")
         .agg(F.max("depth").alias("depth"))
@@ -1691,22 +1633,11 @@ def session_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     stream == batch: shares ``session_window_native``'s gaps-and-islands
     oracle, so the hash gate proves the session-merge state machinery
     reproduces the batch closed form exactly."""
-    spark, stream, out, cp = _staged_sentinel_stream(
-        tables["events"], "session_stream"
-    )
+    stream, _ = _staged_sentinel_stream(tables["events"], "session_stream")
     from flink_210225_spark.operators.sessions import session_window_agg
 
     agg = session_window_agg(stream.withWatermark("ts", "10 seconds"))
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+    return _sink(agg, "session_stream").filter(F.col("user_id") >= 0)
 
 
 def make_cusum_func() -> Callable:
@@ -1803,32 +1734,10 @@ def cusum_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     the recurrence itself."""
     ev = tables["events"]
     spark = ev.sparkSession
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(*_local_paths(ev))
-    ts_is_long = dict(raw.dtypes)["ts"] == "bigint"
-    if ts_is_long:
-        batch_ev = raw.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp")
-        )
-    else:
-        batch_ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    # ONE full-scan aggregate for every driver-side scalar this pipeline
-    # needs (raw max for the sentinels, day span for the silver watermark) —
-    # previously max_ts and the span were two separate full-scan collects.
-    if ts_is_long:
-        _conv = F.expr("timestamp_micros(ts div 1000)").cast("timestamp")
-    else:
-        _conv = F.col("ts").cast("timestamp")
-    scal = raw.agg(
-        F.max("ts").alias("max_ts"),
-        F.min(F.date_format(_conv, "yyyy-MM-dd")).alias("lo"),
-        F.max(F.date_format(_conv, "yyyy-MM-dd")).alias("hi"),
-    ).collect()[0]
-    max_ts = scal["max_ts"]
     profile = (
-        batch_ev.groupBy(
-            F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
-        )
+        # date_format of the wall-clock ts: the same day the stream's
+        # session-zone timestamp renders
+        ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type")
         .agg(F.count("*").alias("pv_ct"))
         .groupBy("event_type")
         .agg(
@@ -1843,44 +1752,13 @@ def cusum_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # ---- stage 1 (bronze): watermark-flushed daily counts ----
-    bronze_out = _scratch(prefix="cusum_stream_bronze_")
-    bronze_cp = _scratch(prefix="cusum_stream_bronze_cp_")
-    srcdir = _scratch(prefix="cusum_stream_src_")
-    _stage_fixture(ev, srcdir, "events")
     # Sentinel offsets are DAY-granular here (+1d/+2d), not the sibling
     # capstones' +2h/+4h: those tumble by hour, this stage tumbles by DAY,
     # and an hour-scale sentinel only flushes the final day's window when
     # the fixture's last event happens to fall late enough in the day.
-    for i, days_off in enumerate((1, 2)):
-        if ts_is_long:
-            sent_ts = max_ts + days_off * 24 * 3_600_000_000_000
-        else:
-            from datetime import timedelta
-
-            sent_ts = max_ts + timedelta(days=days_off)
-        sent_vals = [-(i + 1), sent_ts, -1, "__sentinel__", 0.0, "{}"]
-        if len(raw.dtypes) != len(sent_vals):
-            raise ValueError(
-                f"sentinel arity {len(sent_vals)} != events schema {raw.dtypes}"
-            )
-        sent = one_row_df(
-            spark, [(n, dt, v) for (n, dt), v in zip(raw.dtypes, sent_vals)]
-        )
-        sdir = _scratch(prefix=f"cusum_stream_sentinel{i}_")
-        sent.coalesce(1).write.mode("overwrite").parquet(sdir)
-        part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
-        os.link(os.path.join(sdir, part), os.path.join(srcdir, f"sentinel_{i}.parquet"))
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
+    stream, scal = _staged_sentinel_stream(
+        ev, "cusum_stream", offsets=(timedelta(days=1), timedelta(days=2))
     )
-    if ts_is_long:
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp")
-        )
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     daily = (
         stream.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 day"), "event_type")
@@ -1904,26 +1782,11 @@ def cusum_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     # directly halves the silver stream's micro-batch (state-store commit)
     # count. repartition, never coalesce: coalesce would narrow the tumble
     # operator's own partitioning and change its state-store layout.
-    with _stream_shuffle(spark, "2"):
-        q = (
-            daily.repartition(1)
-            .writeStream.format("parquet")
-            .option("path", bronze_out)
-            .option("checkpointLocation", bronze_cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    bronze = _sink(daily.repartition(1), "cusum_stream_bronze", "2")
     # ---- stage 2 (silver): re-ingest the bronze sink + CUSUM state ----
     landing = _scratch(prefix="cusum_stream_silver_src_")
-    parts = sorted(
-        f for f in os.listdir(bronze_out) if f.endswith(".parquet")
-    )
-    for i, f_ in enumerate(parts):
-        os.link(os.path.join(bronze_out, f_), os.path.join(landing, f"b{i}.parquet"))
-    import datetime as _dt
-
-    max_day = _dt.date.fromisoformat(scal["hi"])
+    for i, part in enumerate(_local_paths(bronze)):
+        os.link(part, os.path.join(landing, f"b{i}.parquet"))
     # The bronze sink's part files carry NO cross-file time order (each
     # flush batch hash-partitions (day, type) rows over the shuffle), so
     # a file-by-file re-ingest sees days arbitrarily out of order. The
@@ -1931,22 +1794,17 @@ def cusum_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     # span plus margin — or later-file rows behind the watermark are
     # dropped as late data before they reach the stateful operator
     # (measured: 50/150 rows survive with a 1-second delay).
-    delay_days = (max_day - _dt.date.fromisoformat(scal["lo"])).days + 2
-    for i, extra in enumerate((2, 4)):
-        sent = one_row_df(
-            spark,
-            [
-                ("day", "string", str(max_day + _dt.timedelta(days=delay_days + extra))),
+    delay_days = _span_delay_days(scal)
+    if scal["hi"] is not None:
+        max_day = date.fromisoformat(scal["hi"])
+        for i, extra in enumerate((2, 4)):
+            sent_day = max_day + timedelta(days=delay_days + extra)
+            cols = [
+                ("day", "string", str(sent_day)),
                 ("event_type", "string", "__sentinel__"),
                 ("pv_ct", "long", 0),
-            ],
-        )
-        sdir = _scratch(prefix=f"cusum_stream_silver_sentinel{i}_")
-        sent.coalesce(1).write.mode("overwrite").parquet(sdir)
-        part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
-        os.link(
-            os.path.join(sdir, part), os.path.join(landing, f"sentinel_{i}.parquet")
-        )
+            ]
+            _link_sentinel(spark, cols, landing, i, "cusum_stream_silver")
     silver = (
         spark.readStream.schema("day string, event_type string, pv_ct long")
         .option("maxFilesPerTrigger", 1)
@@ -1955,8 +1813,6 @@ def cusum_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
         .join(F.broadcast(profile), "event_type", "left")
         .withWatermark("ts", f"{delay_days} days")
     )
-    out = _scratch(prefix="cusum_stream_out_")
-    cp = _scratch(prefix="cusum_stream_cp_")
     result = silver.groupBy("event_type").applyInPandasWithState(
         make_cusum_func(),
         outputStructType=CUSUM_OUTPUT_SCHEMA,
@@ -1965,18 +1821,12 @@ def cusum_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     # The CUSUM state is keyed by event_type (a handful of keys): 2 state
-    # stores per micro-batch, not 8 — the per-batch commit overhead is the
-    # entire cost of this two-stage pipeline at fixture scale.
-    with _stream_shuffle(spark, "2"):
-        q = (
-            result.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("event_type") != "__sentinel__")
+    # stores per micro-batch, not 8. Commits are not where this pipeline's
+    # time goes: a StreamingQueryListener probe at sf0.01 (4 cores) put
+    # 12.4 s of its micro-batches in addBatch against ~1.1 s in offset/WAL
+    # commits.
+    cusum = _sink(result, "cusum_stream", "2")
+    return cusum.filter(F.col("event_type") != "__sentinel__")
 
 
 def _visitor_stats_oracle() -> str:
@@ -2009,9 +1859,7 @@ def topk_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     stream == batch, hash-gated. State is (days×types×users)-keyed counts
     — bounded by the watermark horizon, the textbook streaming-top-k
     state budget."""
-    spark, stream, out, cp = _staged_sentinel_stream(
-        tables["events"], "topk_stream"
-    )
+    stream, _ = _staged_sentinel_stream(tables["events"], "topk_stream")
     agg = (
         stream.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 day"), "event_type", "user_id")
@@ -2023,16 +1871,7 @@ def topk_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
             F.col("ct").cast("long").alias("ct"),
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    fin = spark.read.parquet(out).filter(F.col("event_type") != "__sentinel__")
+    fin = _sink(agg, "topk_stream").filter(F.col("event_type") != "__sentinel__")
     w = Window.partitionBy("day", "event_type").orderBy(
         F.desc("ct"), F.asc("user_id")
     )
@@ -2057,9 +1896,7 @@ def changepoint_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     the serving layer, the topk capstone's lambda seam)."""
     from flink_210225_spark.operators.windows import changepoint_from_daily
 
-    spark, stream, out, cp = _staged_sentinel_stream(
-        tables["events"], "chgpt_stream"
-    )
+    stream, _ = _staged_sentinel_stream(tables["events"], "chgpt_stream")
     agg = (
         stream.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 day"), "event_type")
@@ -2070,16 +1907,7 @@ def changepoint_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
             F.col("pv").cast("long").alias("pv"),
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    daily = spark.read.parquet(out).filter(F.col("event_type") != "__sentinel__")
+    daily = _sink(agg, "chgpt_stream").filter(F.col("event_type") != "__sentinel__")
     return changepoint_from_daily(daily)
 
 
@@ -2099,35 +1927,10 @@ def dedup_wm_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     parallelism — so only key columns pass the sink), then rolled up per
     day. Oracle = batch COUNT(DISTINCT user) per day: any state leak
     doubles the counts, any over-eviction halves them."""
-    ev = tables["events"]
-    spark = ev.sparkSession
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(*_local_paths(ev))
-    ts_is_long = dict(raw.dtypes)["ts"] == "bigint"
-    if ts_is_long:
-        batch_ts = F.expr("timestamp_micros(ts div 1000)").cast("timestamp")
-    else:
-        batch_ts = F.col("ts").cast("timestamp")
-    span = raw.select(batch_ts.alias("t")).agg(
-        F.min("t").alias("lo"), F.max("t").alias("hi")
-    ).collect()[0]
-    delay_days = (span["hi"].date() - span["lo"].date()).days + 2
-    out = _scratch(prefix="dedup_wm_out_")
-    cp = _scratch(prefix="dedup_wm_cp_")
-    srcdir = _scratch(prefix="dedup_wm_src_")
-    _stage_fixture(ev, srcdir, "replay_a")
-    _stage_fixture(ev, srcdir, "replay_b")
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
+    stream, scal = _staged_sentinel_stream(
+        tables["events"], "dedup_wm", offsets=(), replays=2
     )
-    if ts_is_long:
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp")
-        )
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    delay_days = _span_delay_days(scal)
     keyed = (
         stream.select(
             "ts", "user_id", F.date_format("ts", "yyyy-MM-dd").alias("day")
@@ -2136,17 +1939,8 @@ def dedup_wm_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "day"])
         .select("day", "user_id")
     )
-    with _stream_shuffle(spark):
-        q = (
-            keyed.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(out)
+        _sink(keyed, "dedup_wm")
         .groupBy("day")
         .agg(F.count("*").cast("long").alias("n_users"))
     )

@@ -1,6 +1,6 @@
 """Round-11 optimization gates.
 
-Scale-conditional ``_spread`` (VERDICT r10 #2): the round-robin
+Scale-conditional ``io.spread`` (VERDICT r10 #2): the round-robin
 repartition that parallelizes single-split fixture scans must NOT fire
 when the source already arrives in many file splits — on a cluster the
 unconditional version was a full corpus network pass (guide §2.3/§2.4).
@@ -35,28 +35,32 @@ def test_few_input_splits_many_files(spark, tmpdir):
     ["similarity", "text", "multimodal"],
 )
 def test_spread_skips_many_split_source(spark, tmpdir, module):
-    """A many-file source must pass through _spread without a repartition:
-    the plan keeps the scan's own partitioning (no added Exchange)."""
+    """Each module's spreads go through the one ``io.spread``, and a
+    many-file source passes through it without a repartition — round-robin
+    or hashed: the plan keeps the scan's own partitioning (no added
+    Exchange)."""
     import importlib
 
+    from flink_210225_spark.io import spread
+
     mod = importlib.import_module(f"flink_210225_spark.ops.{module}")
+    assert mod.spread is spread
     par = spark.sparkContext.defaultParallelism
     many = _n_files(spark, tmpdir, max(par, 2))
-    spread = mod._spread(many)
-    assert spread is many  # identity: no Exchange added
-    assert "Exchange" not in spread._jdf.queryExecution().executedPlan().toString()
+    for keys in ((), ("id",)):
+        assert spread(many, *keys) is many  # identity: no Exchange added
+    assert "Exchange" not in many._jdf.queryExecution().executedPlan().toString()
 
 
 def test_spread_still_fires_on_single_split(tables):
-    """Fixture scans (one file) must keep the local-mode parallelism fix."""
-    from flink_210225_spark.ops.text import _spread
+    """Fixture scans (one file) must keep the local-mode parallelism fix,
+    round-robin and hashed by key alike."""
+    from flink_210225_spark.io import spread
 
-    docs = tables["documents"]
-    spread = _spread(docs.select("doc_id"))
-    assert (
-        spread.rdd.getNumPartitions()
-        == docs.sparkSession.sparkContext.defaultParallelism
-    )
+    docs = tables["documents"].select("doc_id")
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    assert spread(docs).rdd.getNumPartitions() == par
+    assert spread(docs, "doc_id").rdd.getNumPartitions() == par
 
 
 def test_doc_shingles_skips_spread_on_many_files(spark, tmpdir):
@@ -92,7 +96,7 @@ def test_langid_trigram_no_per_consumer_preagg_exchange(tables):
     import re
 
     plan = _plan(langid_trigram(tables))
-    # Exactly the natural exchanges survive: the two _spread round-robins,
+    # Exactly the natural exchanges survive: the two spread round-robins,
     # the vocab-sized (lang,tg) agg, the tg window, the (doc_id,plang) agg
     # + doc windows, and the final join. The per-doc pre-agg added TWO
     # hashpartitioning(doc_id, lang, tg) exchanges; none may remain.

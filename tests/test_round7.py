@@ -346,11 +346,11 @@ def test_jsonl_gzip_files_actually_gzip(tables):
     import glob
     import os
 
+    from flink_210225_spark import io
     from flink_210225_spark.sources.jsonl import jsonl_gzip_counts
-    from flink_210225_spark.streaming import pipelines as sp
 
     jsonl_gzip_counts(tables).collect()
-    root = sp._SCRATCH_ROOT
+    root = io._SCRATCH_ROOT
     dirs = sorted(glob.glob(os.path.join(root, "jsonl_gz_*")))
     assert dirs
     files = glob.glob(os.path.join(dirs[-1], "part-*"))

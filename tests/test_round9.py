@@ -152,16 +152,16 @@ def test_zorder_prune_beats_linear(tables):
 
 
 def test_decode_spread_parallelism(tables):
-    """The _spread fix: multimodal decode inputs must not run on the
+    """The spread fix: multimodal decode inputs must not run on the
     single scan partition (r9 bench root-cause — 27 s single-threaded vs
     ~1.5 s spread at sf0.1 for the video kernels)."""
-    from flink_210225_spark.ops.multimodal import _spread
+    from flink_210225_spark.io import spread
 
     docs = tables["documents"]
     assert docs.rdd.getNumPartitions() <= 2  # the premise: tiny scan
-    spread = _spread(docs.select("doc_id"))
+    spread_df = spread(docs.select("doc_id"))
     assert (
-        spread.rdd.getNumPartitions()
+        spread_df.rdd.getNumPartitions()
         == docs.sparkSession.sparkContext.defaultParallelism
     )
 

@@ -640,72 +640,57 @@ def test_pattern_stream_continues_across_batches(spark, tmp_path):
     assert {(r.user_id, r.start_event_id, r.end_event_id) for r in got} == want
 
 
-def test_dedup_stream_materialized_two_batch_replay(tables):
-    """The driver-gated stateful streaming query: fixture replayed twice
-    (maxFilesPerTrigger=1 ⇒ two micro-batches), batch 2's 500 re-ingested
-    copies all dropped by cross-batch digest state; admitted digest set ==
-    batch DISTINCT md5(text)."""
-    from flink_210225_spark.streaming import pipelines as sp
-
-    from .conftest import SF_DIR
+@pytest.mark.parametrize("name", sorted(sp.QUERIES))
+def test_stream_capstone_matches_oracle(tables, name):
+    """Every materialized streaming capstone — fixture replayed through
+    readStream, its state (dedup digests, window/session/join buffers,
+    keyed timers, the two-stage cusum cascade) carried across micro-batches
+    and drained through the sink's commit log — must equal its DuckDB
+    oracle (stream == batch)."""
     from .oracle import assert_matches_oracle
 
-    df = sp.QUERIES["stream_dedup_materialized"](tables)
-    assert_matches_oracle(df, sp.ORACLES["stream_dedup_materialized"], SF_DIR)
+    assert_matches_oracle(sp.QUERIES[name](tables), sp.ORACLES[name], SF_DIR)
 
 
-def test_window_stream_materialized_watermark_flush(tables):
-    """Third driver-gated streaming query: tumbling windows held in state
-    across micro-batches flush only when the sentinel batches push the
-    watermark past their ends; the flushed set equals the batch
-    window_visitor_stats oracle exactly (stream == batch)."""
-    from flink_210225_spark.streaming import pipelines as sp
+def _empty_events_copy(dst):
+    """sf0.001 with a zero-row events.parquet of the same schema (every
+    other table symlinked)."""
+    import os
 
-    from .conftest import SF_DIR
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(SF_DIR):
+        if f != "events.parquet":
+            os.symlink(os.path.join(SF_DIR, f), dst / f)
+    schema = pq.read_schema(os.path.join(SF_DIR, "events.parquet"))
+    pq.write_table(schema.empty_table(), dst / "events.parquet")
+    return str(dst)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_window_materialized",
+        "stream_stateful_materialized",
+        "stream_session_materialized",
+        "stream_topk_materialized",
+        "stream_dedup_wm_materialized",
+        "stream_funnel_materialized",
+        "stream_changepoint_materialized",
+        "stream_cusum_materialized",
+    ],
+)
+def test_stream_capstone_empty_events(spark, tmp_path, name):
+    """A zero-row events fixture stages no sentinels and drains to an
+    empty sink, which reads back as zero rows — the oracle's answer — not
+    a crash at ``max_ts + offset`` or an AnalysisException."""
+    from flink_210225_spark.io import load_tables
+
     from .oracle import assert_matches_oracle
 
-    df = sp.QUERIES["stream_window_materialized"](tables)
-    assert_matches_oracle(df, sp.ORACLES["stream_window_materialized"], SF_DIR)
-
-
-def test_join_stream_materialized_stream_equals_batch(tables):
-    """Fourth driver-gated streaming query: the stream-stream interval join
-    (both sides buffered in symmetric join state, watermark-bounded) must
-    emit exactly the batch interval join's rows — no drops, no premature
-    eviction, no double emission through the file sink's commit log."""
-    from flink_210225_spark.streaming import pipelines as sp
-
-    from .conftest import SF_DIR
-    from .oracle import assert_matches_oracle
-
-    df = sp.QUERIES["stream_join_materialized"](tables)
-    assert_matches_oracle(df, sp.ORACLES["stream_join_materialized"], SF_DIR)
-
-
-def test_stateful_stream_materialized_timers_fire_all(tables):
-    """Fifth driver-gated streaming query: applyInPandasWithState jump
-    detection with sentinel-advanced watermark must emit EXACTLY the batch
-    jump set — cross-batch pending state, event-time timer firing (with its
-    one-batch watermark lag), and the sink commit log all under one hash."""
-    from flink_210225_spark.streaming import pipelines as sp
-
-    from .conftest import SF_DIR
-    from .oracle import assert_matches_oracle
-
-    df = sp.QUERIES["stream_stateful_materialized"](tables)
-    assert_matches_oracle(df, sp.ORACLES["stream_stateful_materialized"], SF_DIR)
-
-
-def test_enrich_stream_materialized_stream_equals_batch(tables):
-    """Sixth driver-gated streaming query: per-micro-batch broadcast dim
-    joins (stream-static) must produce exactly the batch join."""
-    from flink_210225_spark.streaming import pipelines as sp
-
-    from .conftest import SF_DIR
-    from .oracle import assert_matches_oracle
-
-    df = sp.QUERIES["stream_enrich_materialized"](tables)
-    assert_matches_oracle(df, sp.ORACLES["stream_enrich_materialized"], SF_DIR)
+    sf_dir = _empty_events_copy(tmp_path)
+    df = sp.QUERIES[name](load_tables(spark, sf_dir))
+    assert_matches_oracle(df, sp.ORACLES[name], sf_dir)
 
 
 def test_pattern_stream_cross_batch_disorder(spark, tmp_path):
@@ -900,20 +885,6 @@ def test_funnel_stream_cross_batch_disorder(spark, tmp_path):
     for r in got:
         depth[r.user_id] = max(depth.get(r.user_id, 0), r.depth)
     assert depth[1] == 3
-
-
-def test_cusum_stream_materialized_two_stage_cascade(tables):
-    """The bronze→silver chained pipeline must equal the batch closed form
-    exactly: the bronze sink's hash-scattered part files replay days
-    genuinely out of order into the silver stage, so a passing hash also
-    proves the watermark-buffered recurrence is disorder-correct."""
-    from flink_210225_spark.streaming import pipelines as sp
-
-    from .conftest import SF_DIR
-    from .oracle import assert_matches_oracle
-
-    df = sp.QUERIES["stream_cusum_materialized"](tables)
-    assert_matches_oracle(df, sp.ORACLES["stream_cusum_materialized"], SF_DIR)
 
 
 def test_session_stream_chaos_kill_and_restart_exactly_once(
